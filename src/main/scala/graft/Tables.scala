@@ -23,13 +23,12 @@ object Tables {
     * same schema (TESTDATA.md contract) and is re-listed at action
     * time regardless.
     */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.types.StructType]
+  private val schemaMemo =
+    Memo.untimed[org.apache.spark.sql.types.StructType]("Tables.schema")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
-    val sch = schemaMemo.getOrElseUpdate((spark, p),
-      spark.read.parquet(p).schema)
+    val sch = schemaMemo(spark, p)(spark.read.parquet(p).schema)
     spark.read.schema(sch).parquet(p)
   }
 

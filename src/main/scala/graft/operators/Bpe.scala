@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Memo, Tables}
 import graft.Ckpt.TruncOps
 import graft.functions.Text
 
@@ -144,28 +144,13 @@ object Bpe {
   /** Cold cost of the BPE memo fills (merge table + encoded
     * vocabulary), published by Bench next to the graph memos'
     * counter so per-query warm numbers stay honestly accounted.
-    * Same outermost-span reentrancy guard as WordCount.timedFill
-    * (wordIds' fill calls trainMerges).
+    * The three memos share this counter, so the merge training nested
+    * in a wordIds fill counts once.
     */
   val memoFillNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private val fillDepth = new ThreadLocal[Integer] {
-    override def initialValue(): Integer = 0
-  }
-
-  private def timedFill[T](body: => T): T = {
-    val outer = fillDepth.get() == 0
-    fillDepth.set(fillDepth.get() + 1)
-    val t0 = System.nanoTime()
-    try {
-      val r = body
-      if (outer) memoFillNanos.addAndGet(System.nanoTime() - t0)
-      r
-    } finally fillDepth.set(fillDepth.get() - 1)
-  }
-
-  private val mergesMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, String, Long)]]
+  private val mergesMemo =
+    Memo[Seq[(String, String, Long)]]("Bpe.merges", memoFillNanos)
 
   /** The learned merge sequence [(lhs, rhs, pair_count)], memoized
     * like the graph memos: a production pipeline trains the tokenizer
@@ -186,28 +171,26 @@ object Bpe {
     else trainMergesSequential(spark, dir)
 
   private def trainMergesSequential(spark: SparkSession, dir: String): Seq[(String, String, Long)] =
-    mergesMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString),
-      timedFill {
-        var v = vocabOf(spark, dir)
-          .withColumn("seq", charSeq(col("w"))).truncated
-        val out = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
-        var exhausted = false
-        while (out.length < NumMerges && !exhausted) {
-          // TakeOrdered, not a global sort: 1 row reaches the driver
-          val best = pairCounts(v)
-            .orderBy(desc("pair_count"), asc("lhs"), asc("rhs"))
-            .limit(1).collect()
-          if (best.isEmpty) exhausted = true
-          else {
-            val a = best(0).getString(0)
-            val b = best(0).getString(1)
-            out += ((a, b, best(0).getLong(2)))
-            v = v.withColumn("seq", foldMerge(col("seq"), a, b)).truncated
-          }
+    mergesMemo(spark, dir) {
+      var v = vocabOf(spark, dir)
+        .withColumn("seq", charSeq(col("w"))).truncated
+      val out = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
+      var exhausted = false
+      while (out.length < NumMerges && !exhausted) {
+        // TakeOrdered, not a global sort: 1 row reaches the driver
+        val best = pairCounts(v)
+          .orderBy(desc("pair_count"), asc("lhs"), asc("rhs"))
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val a = best(0).getString(0)
+          val b = best(0).getString(1)
+          out += ((a, b, best(0).getLong(2)))
+          v = v.withColumn("seq", foldMerge(col("seq"), a, b)).truncated
         }
-        out.toList
-      })
+      }
+      out.toList
+    }
 
   /** The merge table as the driver-visible artifact. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
@@ -271,8 +254,8 @@ object Bpe {
     out.toList
   }
 
-  private val batchedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, String, Long)]]
+  private val batchedMemo =
+    Memo[Seq[(String, String, Long)]]("Bpe.batched", memoFillNanos)
 
   /** Batched-round training: per round ONE TakeOrdered collect of the
     * top-BpeCandidateWindow pairs (constant-size driver contract),
@@ -286,30 +269,28 @@ object Bpe {
     * the `pipe_bpe_train_batched` oracle replays it cell-for-cell.
     */
   def trainMergesBatched(spark: SparkSession, dir: String): Seq[(String, String, Long)] =
-    batchedMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString),
-      timedFill {
-        var v = vocabOf(spark, dir)
-          .withColumn("seq", charSeq(col("w"))).truncated
-        val out = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
-        var round = 0
-        var exhausted = false
-        while (round < BpeRounds && !exhausted) {
-          val top = pairCounts(v)
-            .orderBy(desc("pair_count"), asc("lhs"), asc("rhs"))
-            .limit(BpeCandidateWindow).collect()
-            .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-          val picks = selectDisjoint(top, BpeBatch)
-          if (picks.isEmpty) exhausted = true
-          else {
-            out ++= picks
-            v = v.withColumn("seq",
-              foldMergeMulti(col("seq"), picks.map(p => (p._1, p._2)))).truncated
-          }
-          round += 1
+    batchedMemo(spark, dir) {
+      var v = vocabOf(spark, dir)
+        .withColumn("seq", charSeq(col("w"))).truncated
+      val out = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
+      var round = 0
+      var exhausted = false
+      while (round < BpeRounds && !exhausted) {
+        val top = pairCounts(v)
+          .orderBy(desc("pair_count"), asc("lhs"), asc("rhs"))
+          .limit(BpeCandidateWindow).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+        val picks = selectDisjoint(top, BpeBatch)
+        if (picks.isEmpty) exhausted = true
+        else {
+          out ++= picks
+          v = v.withColumn("seq",
+            foldMergeMulti(col("seq"), picks.map(p => (p._1, p._2)))).truncated
         }
-        out.toList
-      })
+        round += 1
+      }
+      out.toList
+    }
 
   /** The batched merge table as the driver-visible artifact. */
   def bpeTrainBatched(spark: SparkSession, dir: String): DataFrame =
@@ -364,8 +345,7 @@ object Bpe {
       .groupBy(col("sym0").as("sym")).agg(min(col("id0")).as("id"))
   }
 
-  private val wordIdsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val wordIdsMemo = Memo[DataFrame]("Bpe.wordIds", memoFillNanos)
 
   /** Per-word id sequence (space-joined) and symbol count — the
     * encoded VOCABULARY, memoized like the merge table itself (it is
@@ -374,22 +354,20 @@ object Bpe {
     * consumer (encode, roundtrip) probes a vocabulary-sized table.
     */
   def wordIds(spark: SparkSession, dir: String): DataFrame =
-    wordIdsMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString),
-      timedFill {
-        val merges = trainMerges(spark, dir)
-        val enc = encodedVocab(spark, dir, merges)
-        val syms = symbolIds(spark, enc, merges)
-        enc.select(col("w"),
-            posexplode(split(col("seq"), " ")).as(Seq("spos", "sym")))
-          .join(syms, Seq("sym"))
-          .groupBy("w")
-          .agg(count(lit(1)).as("n_syms"),
-            array_join(
-              transform(array_sort(collect_list(struct(col("spos"), col("id")))),
-                x => x.getField("id").cast("string")), " ").as("wids"))
-          .truncated
-      })
+    wordIdsMemo(spark, dir) {
+      val merges = trainMerges(spark, dir)
+      val enc = encodedVocab(spark, dir, merges)
+      val syms = symbolIds(spark, enc, merges)
+      enc.select(col("w"),
+          posexplode(split(col("seq"), " ")).as(Seq("spos", "sym")))
+        .join(syms, Seq("sym"))
+        .groupBy("w")
+        .agg(count(lit(1)).as("n_syms"),
+          array_join(
+            transform(array_sort(collect_list(struct(col("spos"), col("id")))),
+              x => x.getField("id").cast("string")), " ").as("wids"))
+        .truncated
+    }
 
   /** Inverse vocabulary id → symbol string (min-id entries only, the
     * bijective slice `wordIds` actually emits).

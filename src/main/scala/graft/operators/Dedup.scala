@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Memo, Tables}
 import graft.functions.Text
 import graft.Ckpt.TruncOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -99,6 +99,12 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     nearDupPairsOf(spark, dir).orderBy("doc_id_1", "doc_id_2")
 
+  /** Cold fill time of the near-dup pair memo — its own
+    * `memo_fill_breakdown` entry so the one-time cost stays
+    * attributable (VERDICT r14 #8 discipline).
+    */
+  val pairsFillNanos = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** The verified near-dup pair table of the NATURAL corpus (blocked
     * exact shingle-Jaccard ≥ 0.35), MEMOIZED per (session, corpus
     * dir) — the `semIndexMemo` discipline applied to the lexical
@@ -109,23 +115,12 @@ object Dedup {
     * assignment — three registry rows, one pair computation). Fills
     * during Bench's untimed warmup, accounted in `memo_fill_sec`.
     */
-  private val nearDupPairsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Cold fill time of the near-dup pair memo — its own
-    * `memo_fill_breakdown` entry so the one-time cost stays
-    * attributable (VERDICT r14 #8 discipline).
-    */
-  val pairsFillNanos = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val nearDupPairsMemo =
+    Memo[DataFrame]("Dedup.nearDupPairs", pairsFillNanos)
 
   private[graft] def nearDupPairsOf(spark: SparkSession, dir: String): DataFrame =
-    nearDupPairsMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString), {
-        val t0 = System.nanoTime()
-        val r = graft.Ckpt.truncate(ngramJaccardOn(docsTable(spark, dir)))
-        pairsFillNanos.addAndGet(System.nanoTime() - t0)
-        r
-      })
+    nearDupPairsMemo(spark, dir)(
+      graft.Ckpt.truncate(ngramJaccardOn(docsTable(spark, dir))))
 
   /** Shingle CONTAINMENT ≥ 0.3 pairs — the asymmetric companion to
     * Jaccard: containment(a→b) = |A∩B| / |A| flags a document mostly
@@ -381,9 +376,7 @@ object Dedup {
 
   private[graft] def stageLshIndexOf(dir: String)(docs: => DataFrame): String =
     Staging.stagedDir(LshIndexRoot, dir) { tmp =>
-      val t0 = System.nanoTime()
-      try stageLshWrite(tmp, docs)
-      finally lshFillNanos.addAndGet(System.nanoTime() - t0)
+      Memo.timed(lshFillNanos)(stageLshWrite(tmp, docs))
     }
 
   private def stageLshWrite(tmp: java.nio.file.Path,
@@ -1014,6 +1007,9 @@ object Dedup {
       .select(col("id").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_size"))
       .orderBy("doc_id")
 
+  /** Cold fill time of the component-label memo (VERDICT r14 #8). */
+  val componentsFillNanos = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** The collapsed near-dup component labels of corpus + planted
     * copies, MEMOIZED per (session, corpus dir) — the
     * `nearDupPairsOf` discipline applied to the component table: a
@@ -1027,21 +1023,12 @@ object Dedup {
     * across JVM runs; Verify computes fresh and the oracle replays
     * the uncollapsed semantics.
     */
-  private val componentsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Cold fill time of the component-label memo (VERDICT r14 #8). */
-  val componentsFillNanos = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val componentsMemo =
+    Memo[DataFrame]("Dedup.components", componentsFillNanos)
 
   private def componentsOf(spark: SparkSession, dir: String): DataFrame =
-    componentsMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString), {
-        val t0 = System.nanoTime()
-        val r = graft.Ckpt.truncate(
-          collapsedNearDupComponents(withPlanted(docsTable(spark, dir))))
-        componentsFillNanos.addAndGet(System.nanoTime() - t0)
-        r
-      })
+    componentsMemo(spark, dir)(graft.Ckpt.truncate(
+      collapsedNearDupComponents(withPlanted(docsTable(spark, dir)))))
 
   /** Near-dup components with EXACT-FAMILY COLLAPSE (VERDICT r14 #1 —
     * the fix for the two worst century rows): docs with the identical
@@ -1516,8 +1503,8 @@ object Dedup {
     */
   val memoFillNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private val semIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val semIndexMemo =
+    Memo[(DataFrame, DataFrame)]("Dedup.semIndex", memoFillNanos)
 
   /** MEMOIZED per (session, corpus): the semantic-dedup INDEX — the
     * quantized vectors with norms, and the multiprobe cell
@@ -1530,13 +1517,7 @@ object Dedup {
     */
   private def semIndex(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    semIndexMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString), {
-        val t0 = System.nanoTime()
-        val r = semIndexCompute(spark, dir)
-        memoFillNanos.addAndGet(System.nanoTime() - t0)
-        r
-      })
+    semIndexMemo(spark, dir)(semIndexCompute(spark, dir))
 
   /** Optional hot-cell cap (`graft.sem.cellcap`): when set, probe
     * rows of cells WIDER than the cap are excluded from candidate

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Memo, Tables}
 import graft.Ckpt.TruncOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -348,14 +348,13 @@ object Similarity {
 
   def stageIvfIndex(spark: SparkSession, dir: String): String =
     Staging.stagedDir(IvfIndexRoot, dir) { tmp =>
-      val t0 = System.nanoTime()
-      try {
+      Memo.timed(ivfFillNanos) {
         val (centroids, assigned) = ivfIndexOf(vecs(spark, dir))
         centroids.write.mode("overwrite")
           .parquet(tmp.resolve("centroids").toString)
         assigned.write.mode("overwrite")
           .parquet(tmp.resolve("assigned").toString)
-      } finally ivfFillNanos.addAndGet(System.nanoTime() - t0)
+      }
     }
 
   /** ANN serving against the PERSISTED IVF index — the
@@ -2195,8 +2194,7 @@ ORDER BY f.vec_id"""
     */
   def stageKnnGraph(spark: SparkSession, dir: String): String =
     Staging.stagedDir(KnnGraphRoot, dir) { tmp =>
-      val t0 = System.nanoTime()
-      try {
+      Memo.timed(knnGraphFillNanos) {
         val g = knnGraphOf(vecs(spark, dir).select(col("vec_id"), col("v")))
         val cap = graft.functions.TopK.topKByScore(2 * NdK)
         g.unionByName(g.select(col("nbr").as("vec_id"),
@@ -2205,7 +2203,7 @@ ORDER BY f.vec_id"""
           .select(col("vec_id"), explode(col("t")).as("s"))
           .select(col("vec_id"), col("s.id").as("nbr"))
           .write.mode("overwrite").parquet(tmp.resolve("edges").toString)
-      } finally knnGraphFillNanos.addAndGet(System.nanoTime() - t0)
+      }
     }
 
   /** Graph-ANN SERVING over the persisted kNN graph — the HNSW-family

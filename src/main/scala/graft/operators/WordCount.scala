@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Memo, Tables}
 import graft.functions.Text
 import graft.Ckpt.TruncOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -298,57 +298,37 @@ object WordCount {
     * consumer reads checkpointed blocks instead of re-running the
     * fact join.
     */
-  /** Cold-path accounting for the three shared graph memos (VERDICT
+  /** Cold-path accounting for the four shared graph memos (VERDICT
     * r9 #2): the memos fill during Bench's untimed warmup, so the
     * per-query timings alone understate the one-time build. Every
     * fill adds its wall time here and Bench publishes the total as
     * `memo_fill_sec` — the warm numbers stay honest because the cold
     * cost is now a visible, separate figure in the same artifact.
+    * The four memos share this counter, so a fill nested in another
+    * (landmark BFS and LPA build the bipartite graph) counts once.
     */
   val memoFillNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  // Reentrancy guard: landmarkBfsCompute's fill calls bipartiteGraph,
-  // so when the landmark memo fills FIRST (e.g. a filtered bench run
-  // of only a landmark query) the nested bipartite fill would be
-  // counted twice — once inside the outer span and once by its own
-  // timedFill. Only the outermost fill on a thread adds its span.
-  private val fillDepth = new ThreadLocal[Integer] {
-    override def initialValue(): Integer = 0
-  }
-
-  private def timedFill[T](body: => T): T = {
-    val outer = fillDepth.get() == 0
-    fillDepth.set(fillDepth.get() + 1)
-    val t0 = System.nanoTime()
-    try {
-      val r = body
-      if (outer) memoFillNanos.addAndGet(System.nanoTime() - t0)
-      r
-    } finally fillDepth.set(fillDepth.get() - 1)
-  }
-
   private val bipartiteMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame)]
+    Memo[(DataFrame, DataFrame)]("WordCount.bipartite", memoFillNanos)
 
   private def bipartiteGraph(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    bipartiteMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString), timedFill {
-        val o = Tables.orders(spark, dir)
-          .select(col("o_orderkey"), col("o_custkey"))
-        val l = Tables.lineitem(spark, dir)
-          .select(col("l_orderkey"), col("l_suppkey"))
-        val eraw = o.join(l, col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey") * 2L).as("a"),
-            (col("l_suppkey") * 2L + SuppParity).as("b"))
-          .distinct()
-          .truncated
-        val edges = eraw.select(col("a").as("src"), col("b").as("dst"))
-          .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(col("src")).truncated
-        (eraw, edges)
-      })
+    bipartiteMemo(spark, dir) {
+      val o = Tables.orders(spark, dir)
+        .select(col("o_orderkey"), col("o_custkey"))
+      val l = Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_suppkey"))
+      val eraw = o.join(l, col("o_orderkey") === col("l_orderkey"))
+        .select((col("o_custkey") * 2L).as("a"),
+          (col("l_suppkey") * 2L + SuppParity).as("b"))
+        .distinct()
+        .truncated
+      val edges = eraw.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
+        .repartition(col("src")).truncated
+      (eraw, edges)
+    }
 
   /** PageRank over the customer↔supplier purchase graph — THE classic
     * iterative MapReduce job (each iteration is exactly one
@@ -689,13 +669,10 @@ SELECT node, dist FROM d$BfsMaxRounds ORDER BY node"""
     * the final checkpointed frame (S·V rows, lineage already
     * truncated), so the second rollup pays only its own aggregation.
     */
-  private val landmarkMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val landmarkMemo = Memo[DataFrame]("WordCount.landmark", memoFillNanos)
 
   private def landmarkBfsReached(spark: SparkSession, dir: String): DataFrame =
-    landmarkMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString),
-      timedFill(landmarkBfsCompute(spark, dir)))
+    landmarkMemo(spark, dir)(landmarkBfsCompute(spark, dir))
 
   private def landmarkBfsCompute(spark: SparkSession, dir: String): DataFrame = {
     val (_, edges) = bipartiteGraph(spark, dir)
@@ -1005,33 +982,30 @@ FROM dall WHERE seed <> node GROUP BY node ORDER BY node"""
     * per downstream query. The memo holds the final checkpointed
     * (node, lbl) frame plus the distinct directed edge list the
     * propagation ran over; fills during Bench's untimed warmup and is
-    * accounted in `memo_fill_sec` via `timedFill`.
+    * accounted in `memo_fill_sec`.
     */
   private val lpaMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame)]
+    Memo[(DataFrame, DataFrame)]("WordCount.lpa", memoFillNanos)
 
   def lpaCommunitiesWithEdges(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    lpaMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString),
-      timedFill {
-        val (eraw, edges) = bipartiteGraph(spark, dir)
-        var labels = edges.select(col("src").as("node")).distinct()
-          .select(col("node"), col("node").as("lbl"))
+    lpaMemo(spark, dir) {
+      val (eraw, edges) = bipartiteGraph(spark, dir)
+      var labels = edges.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl"))
+        .truncated
+      for (_ <- 1 to LpaRounds) {
+        labels = edges
+          .join(labels.withColumnRenamed("node", "src"), Seq("src"))
+          .groupBy(col("dst").as("node"), col("lbl"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy("node")
+          .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
+          .select(col("node"), (-col("m.nl")).as("lbl"))
           .truncated
-        for (_ <- 1 to LpaRounds) {
-          labels = edges
-            .join(labels.withColumnRenamed("node", "src"), Seq("src"))
-            .groupBy(col("dst").as("node"), col("lbl"))
-            .agg(count(lit(1)).as("c"))
-            .groupBy("node")
-            .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-            .select(col("node"), (-col("m.nl")).as("lbl"))
-            .truncated
-        }
-        (labels, eraw)
-      })
+      }
+      (labels, eraw)
+    }
 
   /** Shared LPA CTE prefix (graph + LpaRounds label rounds); callers
     * append their final SELECT over `l$LpaRounds` / `eraw` / `eall`.
@@ -1303,14 +1277,11 @@ SELECT walk_id, step, node FROM (""" +
     * (compact-forward) orientation. Returns (edges, degrees, oriented).
     */
   private val coPurchaseMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
+    Memo[(DataFrame, DataFrame, DataFrame)]("WordCount.coPurchase", memoFillNanos)
 
   private def coPurchaseGraph(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    coPurchaseMemo.getOrElseUpdate(
-      (spark, java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString),
-      timedFill(coPurchaseCompute(spark, dir)))
+    coPurchaseMemo(spark, dir)(coPurchaseCompute(spark, dir))
 
   /** MEMOIZED per (session, corpus dir) — nine wedge-family queries
     * (triangles, truss, clustering, assortativity, kNN-degree,

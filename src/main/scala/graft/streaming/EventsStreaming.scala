@@ -30,8 +30,8 @@ object EventsStreaming {
     * (Tables.schemaMemo, the catalog posture, applied to the staged
     * streaming inputs — r17).
     */
-  private val srcSchemaMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), StructType]
+  private val srcSchemaMemo =
+    graft.Memo.untimed[StructType]("EventsStreaming.srcSchema")
 
   def readEvents(spark: SparkSession, eventsDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -43,8 +43,7 @@ object EventsStreaming {
           .headOption
       first.map(_.toPath.toRealPath().toString).getOrElse(eventsDir)
     }
-    val onDisk = srcSchemaMemo.getOrElseUpdate((spark, key),
-      spark.read.parquet(eventsDir).schema)
+    val onDisk = srcSchemaMemo(spark, key)(spark.read.parquet(eventsDir).schema)
     val reader = spark.readStream.schema(onDisk)
     val stream = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))

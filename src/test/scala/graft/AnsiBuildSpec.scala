@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.util.control.NonFatal
+
 /** ANSI-mode BUILD-path sweep (VERDICT r13 #4 — the real fix for the
-  * AnsiParitySpec scope note): AnsiParitySpec reuses memoized graph /
-  * BPE fills and staged indexes built under the default conf, so its
-  * guarantee covered serve paths only. Here the build-heavy operators
+  * AnsiParitySpec scope note): AnsiParitySpec reuses staged indexes
+  * built under the default conf, so its guarantee covers their serve
+  * paths only. Here the build-heavy operators
   * run against a FRESH COPY of the corpus at a new path — every memo
   * (keyed by (session, dir)) misses and every staged artifact (keyed
   * by path hash + `_SOURCE` fingerprint) re-stages — with
@@ -56,7 +58,7 @@ class AnsiBuildSpec extends SparkTestBase {
         spark.conf.set("spark.sql.ansi.enabled", "true")
         val ansi =
           try Right(fn(spark, fresh.toString).collect().map(_.toSeq).toSeq)
-          catch { case e: Throwable => Left(e.toString.linesIterator.next()) }
+          catch { case NonFatal(e) => Left(e.toString.linesIterator.next()) }
           finally prev.fold(spark.conf.unset("spark.sql.ansi.enabled"))(
             spark.conf.set("spark.sql.ansi.enabled", _))
         ansi match {

@@ -12,14 +12,12 @@ package graft
   * identical output under both modes therefore has no SERVE-PATH
   * arithmetic that silently relies on wrap/NULL-on-overflow at the
   * tested scale — and any FUTURE operator that sneaks one in fails
-  * this suite, not a 3 a.m. production job. Division of labor
-  * (ADVICE r12 #1, closed in r14): memoized artifacts (graph/BPE
-  * memo fills, localCheckpointed lineage) and staged indexes are
-  * built once under the suite's default conf and REUSED here, so
-  * this sweep certifies the serve/probe paths; the one-time BUILD
-  * paths are certified by AnsiBuildSpec, which rebuilds every memo
-  * and staged artifact from scratch on a fresh corpus copy with
-  * ANSI on.
+  * this suite, not a 3 a.m. production job. The in-process memos
+  * are cleared between the two passes (`Memo.clear()`), so every
+  * memo-backed row rebuilds its memo under ANSI. On-disk stagings
+  * (indexes, snapshots, DV tables) built under the default conf are
+  * still reused; their build paths are certified by AnsiBuildSpec,
+  * which re-stages them on a fresh corpus copy with ANSI on.
   *
   * NULL-on-missing lookups that are semantically intended (the
   * Viterbi piece-score probe, the JS-divergence per-source mass) use
@@ -37,6 +35,7 @@ class AnsiParitySpec extends SparkTestBase {
     // shared across suites via getOrCreate (ADVICE r12 #2)
     val default = sweepRegistry(names)(n =>
       SparkEntry.queries(n)(spark, SfDir).collect().map(_.toSeq).toSeq)
+    Memo.clear()
     val prev = spark.conf.getOption("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     val ansi =

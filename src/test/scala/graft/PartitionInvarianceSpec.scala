@@ -9,9 +9,10 @@ package graft
   * order, an aggregation whose tie-break depends on merge order, an
   * unrounded FP sum whose association varies with reducer count —
   * fails here instead of surfacing as a cluster-vs-laptop diff.
-  * Scope note (ADVICE r12 #1): memoized artifacts and staged indexes
-  * built under the default conf are reused, so the sweep certifies
-  * the serve/probe paths, not the one-time build paths.
+  * The in-process memos are cleared between the two passes
+  * (`Memo.clear()`), so memo-backed rows rebuild them at 13
+  * partitions; on-disk stagings built at 4 are still reused, so
+  * their build paths are not re-run here.
   * Streaming drains pin their own state-partition count (8) inside
   * withDrainConf, so they are exercised for sink/replay invariance
   * rather than state sizing.
@@ -28,6 +29,7 @@ class PartitionInvarianceSpec extends SparkTestBase {
     // literal — the session is shared across suites (ADVICE r12 #2)
     val at4 = sweepRegistry(names)(n =>
       SparkEntry.queries(n)(spark, SfDir).collect().map(_.toSeq).toSeq)
+    Memo.clear()
     val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
     val at13 =

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.util.control.NonFatal
+
 /** Shared local session for specs — one per suite, UTC, small shuffle. */
 trait SparkTestBase extends AnyFunSuite {
   val SfDir = "/root/testdata/sf0.001"
@@ -28,8 +30,9 @@ trait SparkTestBase extends AnyFunSuite {
     * could otherwise observe — exactly what the partition sweep must
     * not let happen. Per-query assertions/coverage are unchanged;
     * each query's result is computed by the same `body` and returned
-    * keyed by name (Left = the first line of the throw, matching the
-    * sequential sweeps' error capture).
+    * keyed by name (Left = the first line of a non-fatal throw,
+    * matching the sequential sweeps' error capture; a fatal error
+    * aborts the sweep).
     */
   def sweepRegistry[A](names: Seq[String], par: Int = 4)(
       body: String => A): Map[String, Either[String, A]] = {
@@ -38,7 +41,7 @@ trait SparkTestBase extends AnyFunSuite {
       .empty[String, Either[String, A]]
     def one(n: String): Unit = out(n) =
       try Right(body(n))
-      catch { case e: Throwable => Left(e.toString.linesIterator.next()) }
+      catch { case NonFatal(e) => Left(e.toString.linesIterator.next()) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     try {
       import scala.jdk.CollectionConverters._
