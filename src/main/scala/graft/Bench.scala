@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -52,7 +53,7 @@ object Bench {
       try {
         tele(name) =
           org.apache.spark.sql.graftshim.PlanTelemetry.executedOf(fn(spark, sfDir))
-      } catch { case _: Throwable => failed += name }
+      } catch { case NonFatal(_) => failed += name }
     }
     // 5 timed passes over the whole registry, interleaved at pass level:
     // host CPU-steal bursts (this VM shows 2-5x swings) hit all queries
@@ -73,7 +74,7 @@ object Bench {
         if (names(name) && !failed.contains(name)) {
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
+            catch { case NonFatal(_) => false }
           val dt = (System.nanoTime() - t0) / 1e9
           if (!ok) failed += name
           else times(name) = dt :: times.getOrElse(name, Nil)

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Lineage truncation for the iterative fixpoint family (PageRank,
-  * connected components, k-core, LPA, HITS, BFS, random walks).
+  * connected components, k-core, LPA, HITS, BFS, random walks), and
+  * `converge`, the one round driver of the loops that run until a
+  * fixpoint (SCC closure, k-core, BFS, connected components).
   *
   * Default is `localCheckpoint()` — executor-local blocks, the right
   * trade on a single machine and for short loops, but the blocks die
@@ -26,6 +28,25 @@ object Ckpt {
         df.checkpoint()
       case None => df.localCheckpoint()
     }
+  }
+
+  /** Run `step(state, round)` for rounds 1, 2, ... and return the
+    * state of the first step that reports done. A loop still not done
+    * after `maxRounds` steps throws: a partial state is never returned
+    * as an answer.
+    */
+  def converge[S](what: String, maxRounds: Int)(init: S)(
+      step: (S, Int) => (S, Boolean)): S = {
+    @annotation.tailrec
+    def go(state: S, round: Int): S =
+      if (round > maxRounds)
+        throw new IllegalStateException(
+          s"$what did not reach a fixpoint in $maxRounds rounds")
+      else {
+        val (next, done) = step(state, round)
+        if (done) next else go(next, round + 1)
+      }
+    go(init, 1)
   }
 
   /** `.truncated` postfix form so loop bodies read like the

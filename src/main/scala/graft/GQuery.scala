@@ -15,6 +15,4 @@ final case class GQuery(
 object GQuery {
   def sql(fn: (SparkSession, String) => DataFrame, oracle: String): GQuery =
     GQuery(fn, Some(oracle))
-  def rowsOnly(fn: (SparkSession, String) => DataFrame): GQuery =
-    GQuery(fn, None)
 }

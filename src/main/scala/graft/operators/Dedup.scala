@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Memo, Tables}
+import graft.{Ckpt, GQuery, Memo, Tables}
 import graft.functions.Text
 import graft.Ckpt.TruncOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1116,7 +1116,8 @@ object Dedup {
     * O(diameter) label propagation could not finish within the round
     * cap. Convergence is verified EXACTLY (count + except emptiness of
     * canonical edge sets, not a checksum) and failure to converge
-    * within MaxCcRounds throws rather than returning partial labels.
+    * within MaxCcRounds throws (`Ckpt.converge`) rather than returning
+    * partial labels.
     * Returns (id, lbl = component min, cluster_size) for every node
     * with >= 1 edge.
     */
@@ -1145,11 +1146,10 @@ object Dedup {
         .select(col("m").as("lo"), col("lo").as("hi"))
         .unionByName(m.select(col("m").as("lo"), col("c").as("hi"))))
     }
-    var edges = canon(pairs.select(col("doc_id_1").as("lo"),
+    val start = canon(pairs.select(col("doc_id_1").as("lo"),
       col("doc_id_2").as("hi"))).truncated
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < MaxCcRounds) {
+    val edges = Ckpt.converge("connectedComponents", MaxCcRounds)(start) {
+      (prev, _) =>
       // ONE materialization per round carries both the next edge set
       // and the exact convergence diff (r17 — guide §2.4, fuse the
       // per-round convergence action into the round's own shuffle):
@@ -1161,17 +1161,13 @@ object Dedup {
       // convergence probe and the next round's input are both narrow
       // filters over the one checkpointed tag table — no recompute,
       // no extra shuffle, identical set-equality semantics.
-      val tagged = smallStar(largeStar(edges)).withColumn("s", lit(1))
-        .unionByName(edges.withColumn("s", lit(2)))
+      val tagged = smallStar(largeStar(prev)).withColumn("s", lit(1))
+        .unionByName(prev.withColumn("s", lit(2)))
         .groupBy("lo", "hi").agg(sum(col("s")).as("t"))
         .truncated
-      converged = tagged.filter(col("t") =!= 3).isEmpty
-      edges = tagged.filter(col("t") =!= 2).select(col("lo"), col("hi"))
-      rounds += 1
+      val converged = tagged.filter(col("t") =!= 3).isEmpty
+      (tagged.filter(col("t") =!= 2).select(col("lo"), col("hi")), converged)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $MaxCcRounds rounds")
     // fixpoint = min-rooted star forest: every edge is (root, member)
     val labels = edges.select(col("hi").as("id"), col("lo").as("lbl"))
       .unionByName(edges.select(col("lo").as("id"), col("lo").as("lbl")))

@@ -326,14 +326,6 @@ object Similarity {
 
   val IvfIndexRoot = "/root/repo/target/graft_ivf_index"
 
-  /** Committed-version path of the staged IVF index (resolves the
-    * `_CURRENT` pointer — see `Dedup.lshIndexPathFor`; same
-    * throws-if-unstaged contract — use `Staging.resolveOpt` for
-    * may-not-exist-yet callers).
-    */
-  def ivfIndexPathFor(dir: String): String =
-    Staging.resolve(Staging.pathFor(IvfIndexRoot, dir))
-
   /** Persist the IVF index (centroids + cell assignments) once per
     * corpus dir — the ingest half of every production vector store:
     * the index is BUILT offline and SERVED by probes that never touch

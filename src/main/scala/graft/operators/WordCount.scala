@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Memo, Tables}
+import graft.{Ckpt, GQuery, Memo, Tables}
 import graft.functions.Text
 import graft.Ckpt.TruncOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -64,15 +64,6 @@ object WordCount {
     * oracle can still glob it.
     */
   val TextStageRoot = "/root/repo/target/graft_text_corpus"
-
-  /** Stage subdir for a source dir, keyed by basename PLUS a hash of
-    * the absolute path — two source dirs sharing a basename (or the
-    * same sf staged from different roots) can never collide on one
-    * staging path, so a bench run can't clobber the staging an oracle
-    * compare is reading.
-    */
-  def stagePathFor(dir: String): String =
-    Staging.pathFor(TextStageRoot, dir)
 
   /** Oracle-side glob for the staged text: resolves the `_CURRENT`
     * pointer at call time (the oracle SQL is dumped after staging),
@@ -200,7 +191,7 @@ object WordCount {
     * budget-not-rate rule: a fixed cap, so the closure is O(cap²)
     * at ANY corpus size) and the path-doubling round cap —
     * ceil(log2(cap)) rounds cover every simple path on ≤ cap nodes,
-    * +1 slack before the loud throw.
+    * +1 slack before `Ckpt.converge` throws.
     */
   val SccCapWords = 256
   val SccMaxDoublingRounds = 9
@@ -240,24 +231,15 @@ object WordCount {
         col("dst").isin(topWords.toSeq: _*))
       .distinct()
       .truncated
-    var reach = e
-    var nReach = reach.count()
-    var round = 0
-    var done = false
-    while (!done && round < SccMaxDoublingRounds) {
-      round += 1
-      val grown = reach.unionByName(
-          reach.as("x").join(reach.as("y"), col("x.dst") === col("y.src"))
+    val (reach, _) = Ckpt.converge("SCC path-doubling closure",
+        SccMaxDoublingRounds)((e, e.count())) { case ((r, n), _) =>
+      val grown = r.unionByName(
+          r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
             .select(col("x.src").as("src"), col("y.dst").as("dst")))
         .distinct().truncated
-      val n = grown.count()
-      if (n == nReach) done = true
-      reach = grown
-      nReach = n
+      val m = grown.count()
+      ((grown, m), m == n)
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"SCC path-doubling closure still growing after $SccMaxDoublingRounds rounds")
     val mutual = reach.as("f").join(reach.as("b"),
         col("f.src") === col("b.dst") && col("f.dst") === col("b.src"))
       .select(col("f.src").as("v"), col("f.dst").as("u"))
@@ -507,10 +489,10 @@ ORDER BY pr DESC, node LIMIT 100"""
     * and localCheckpoint'ed per round (lineage truncation), one
     * degree aggregate + two semi-joins per round, convergence =
     * edge count unchanged (peeling only deletes, so equal count ⟺
-    * equal set), LOUD throw past KCoreMaxRounds. The oracle unrolls
-    * exactly KCoreMaxRounds peel rounds — rounds after the fixpoint
-    * are identities, so hash equality proves the loop's fixpoint
-    * semantics while the unroll count stays static.
+    * equal set), `Ckpt.converge` throws past KCoreMaxRounds. The
+    * oracle unrolls exactly KCoreMaxRounds peel rounds — rounds after
+    * the fixpoint are identities, so hash equality proves the loop's
+    * fixpoint semantics while the unroll count stays static.
     */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
     // Same sparsified subgraph as before, derived from the memoized
@@ -518,27 +500,20 @@ ORDER BY pr DESC, node LIMIT 100"""
     // b = 2·suppkey + 1, so a div 2 + b div 2 ≡ custkey + suppkey.
     val eraw = bipartiteGraph(spark, dir)._1
       .filter(pmod(expr("(a div 2) + (b div 2)"), lit(3L)) === 0L)
-    var edges = eraw.select(col("a").as("src"), col("b").as("dst"))
+    val e0 = eraw.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("src")).truncated
-    var prev = edges.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < KCoreMaxRounds) {
-      val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+    val (edges, _) = Ckpt.converge("k-core peel", KCoreMaxRounds)(
+        (e0, e0.count())) { case ((e, prev), _) =>
+      val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= KCoreK).select("src")
-      edges = edges
+      val peeled = e
         .join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
         .repartition(col("src")).truncated
-      val cur = edges.count()
-      converged = cur == prev
-      prev = cur
-      round += 1
+      val cur = peeled.count()
+      ((peeled, cur), cur == prev)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"k-core peel did not reach a fixpoint in $KCoreMaxRounds rounds")
     edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
       .orderBy("node")
   }
@@ -579,39 +554,50 @@ GROUP BY src ORDER BY node"""
     * over the whole run, O(E) total — not the dense O(R·E)
     * re-relaxation. The DuckDB oracle IS the dense form (R unrolled
     * min-union relaxations), a genuinely different construction, so
-    * hash equality proves the frontier rewrite. Loop discipline is the
-    * PageRank one: edges pre-partitioned on src + localCheckpoint
-    * (loop-invariant), reached/frontier checkpointed per round
-    * (lineage truncation). Terminates when the frontier empties
-    * (monotone: BFS levels only grow); throws LOUDLY if the graph's
-    * diameter exceeds BfsMaxRounds, because then the unrolled oracle
-    * would not have fixpointed either. Unreachable nodes are absent
-    * from the output on both engines.
+    * hash equality proves the frontier rewrite. The loop is
+    * `frontierBfs` with one seed: it terminates when the frontier
+    * empties (monotone: BFS levels only grow) and throws if the
+    * graph's diameter exceeds BfsMaxRounds, because then the unrolled
+    * oracle would not have fixpointed either. Unreachable nodes are
+    * absent from the output on both engines.
     */
   def bfsDistance(spark: SparkSession, dir: String): DataFrame = {
     val (_, edges) = bipartiteGraph(spark, dir)
-    var reached = edges.agg(min(col("src")).as("node"))
-      .withColumn("dist", lit(0L)).truncated
-    var frontier = reached.select("node")
-    var round = 0
-    var done = false
-    while (!done && round < BfsMaxRounds) {
-      round += 1
-      val next = edges.join(frontier, edges("src") === frontier("node"))
-        .select(col("dst").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .withColumn("dist", lit(round.toLong))
-        .truncated
-      if (next.isEmpty) done = true
-      else {
-        reached = reached.unionByName(next).truncated
-        frontier = next.select("node")
-      }
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"BFS frontier still non-empty after $BfsMaxRounds rounds")
-    reached.orderBy("node")
+    frontierBfs(edges, edges.agg(min(col("src")).as("node")), bySeed = false)
+      .orderBy("node")
+  }
+
+  /** The frontier BFS behind `wc_bfs_distance` (one seed) and the
+    * landmark rollups (the seed budget): reached (seed, node, dist),
+    * or (node, dist) when `bySeed` is false, for every node within
+    * BfsMaxRounds hops of a seed in `seeds.node`. Each round expands
+    * only last round's frontier (edges ⋈ frontier keyed on the
+    * pre-partitioned src, distinct, anti-join vs reached), so every
+    * edge is traversed once per (seed, endpoint level); reached and
+    * the new level are truncated per round. Done when the frontier
+    * empties; `Ckpt.converge` throws past BfsMaxRounds. One seed keys
+    * the state on node alone: keyed (seed, node), each round's
+    * frontier would leave the distinct partitioned on both columns
+    * and be shuffled again for the src join.
+    */
+  private def frontierBfs(edges: DataFrame, seeds: DataFrame,
+      bySeed: Boolean): DataFrame = {
+    val key = if (bySeed) Seq("seed", "node") else Seq("node")
+    val start = seeds
+      .select(key.map(k => col("node").as(k)) :+ lit(0L).as("dist"): _*)
+      .truncated
+    Ckpt.converge("BFS frontier", BfsMaxRounds)(
+        (start, start.select(key.map(col): _*))) {
+      case ((reached, frontier), round) =>
+        val next = edges.join(frontier, edges("src") === frontier("node"))
+          .select(key.init.map(col) :+ col("dst").as("node"): _*).distinct()
+          .join(reached, key, "left_anti")
+          .withColumn("dist", lit(round.toLong))
+          .truncated
+        if (next.isEmpty) ((reached, frontier), true)
+        else ((reached.unionByName(next).truncated,
+          next.select(key.map(col): _*)), false)
+    }._1
   }
 
   private def bfsOracle: String = {
@@ -647,12 +633,10 @@ SELECT node, dist FROM d$BfsMaxRounds ORDER BY node"""
   /** Landmark closeness centrality: simultaneous multi-source BFS
     * from the seed sample over the co-purchase graph, then per-seed
     * closeness = (n_reached − 1) / Σ dist as a HALF_UP ×1e6 integer.
-    * The frontier loop is `wc_bfs_distance`'s, with (seed, node)
-    * composite state: each round expands last round's frontier only
-    * (edges ⋈ frontier keyed on the pre-partitioned src, distinct,
-    * anti-join vs reached), so every edge is traversed once per
+    * The frontier loop is `frontierBfs`, shared with
+    * `wc_bfs_distance`: every edge is traversed once per
     * (seed, endpoint level) — O(S·E) total worst case, the landmark
-    * budget — with per-round lineage truncation. The oracle is the
+    * budget. The oracle is the
     * DENSE unrolled min-relaxation with a seed column (a genuinely
     * different construction), so hash equality proves the
     * multi-source frontier rewrite. Seeds unreachable-from-nowhere
@@ -672,40 +656,15 @@ SELECT node, dist FROM d$BfsMaxRounds ORDER BY node"""
   private val landmarkMemo = Memo[DataFrame]("WordCount.landmark", memoFillNanos)
 
   private def landmarkBfsReached(spark: SparkSession, dir: String): DataFrame =
-    landmarkMemo(spark, dir)(landmarkBfsCompute(spark, dir))
-
-  private def landmarkBfsCompute(spark: SparkSession, dir: String): DataFrame = {
-    val (_, edges) = bipartiteGraph(spark, dir)
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val nn = nodes.agg(count(lit(1)).as("n_nodes"))
-    val seeds = nodes.crossJoin(broadcast(nn))
-      .filter(pmod(col("node"),
-        greatest(expr(s"n_nodes div $ClosenessTargetSeeds"), lit(1L))) === 0L)
-      .select("node")
-    var reached = seeds
-      .select(col("node").as("seed"), col("node"), lit(0L).as("dist"))
-      .truncated
-    var frontier = reached.select("seed", "node")
-    var round = 0
-    var done = false
-    while (!done && round < BfsMaxRounds) {
-      round += 1
-      val next = edges.join(frontier, edges("src") === frontier("node"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(reached, Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(round.toLong))
-        .truncated
-      if (next.isEmpty) done = true
-      else {
-        reached = reached.unionByName(next).truncated
-        frontier = next.select("seed", "node")
-      }
+    landmarkMemo(spark, dir) {
+      val (_, edges) = bipartiteGraph(spark, dir)
+      val nodes = edges.select(col("src").as("node")).distinct()
+      val nn = nodes.agg(count(lit(1)).as("n_nodes"))
+      frontierBfs(edges, nodes.crossJoin(broadcast(nn))
+        .filter(pmod(col("node"),
+          greatest(expr(s"n_nodes div $ClosenessTargetSeeds"), lit(1L))) === 0L)
+        .select("node"), bySeed = true)
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"landmark BFS frontier still non-empty after $BfsMaxRounds rounds")
-    reached
-  }
 
   def closenessCentrality(spark: SparkSession, dir: String): DataFrame =
     landmarkBfsReached(spark, dir)

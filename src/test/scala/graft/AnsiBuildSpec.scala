@@ -5,9 +5,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
 
 /** ANSI-mode BUILD-path sweep (VERDICT r13 #4 — the real fix for the
-  * AnsiParitySpec scope note): AnsiParitySpec reuses staged indexes
-  * built under the default conf, so its guarantee covers their serve
-  * paths only. Here the build-heavy operators
+  * ConfParitySpec scope note): ConfParitySpec's ANSI sweep reuses
+  * staged indexes built under the default conf, so its guarantee
+  * covers their serve paths only. Here the build-heavy operators
   * run against a FRESH COPY of the corpus at a new path — every memo
   * (keyed by (session, dir)) misses and every staged artifact (keyed
   * by path hash + `_SOURCE` fingerprint) re-stages — with

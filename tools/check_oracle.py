@@ -36,7 +36,7 @@ def main():
     # in its staged-text path — the oracle contract has no sfDir
     # parameter. When sweeping other SFs locally, rewrite the staged
     # path to the SF under test (same basename_hash scheme as
-    # WordCount.stagePathFor).
+    # Staging.pathFor).
     import hashlib, pathlib
     def stage_path(d):
         ap = str(pathlib.Path(d).resolve())
